@@ -63,10 +63,6 @@ class ChunkFold(NamedTuple):
     first_page: str
     last_page: str
 
-    @property
-    def has_content(self) -> bool:
-        return bool(self.last_page)
-
 
 def fold_chunk(pages: List[str]) -> Optional[ChunkFold]:
     """Fold one chunk; returns None when no page in the chunk survives."""

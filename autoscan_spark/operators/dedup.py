@@ -415,7 +415,6 @@ def connected_components(
 # corpus-sized (LSH bands emit only colliding docs), so even 100 TB corpora
 # routinely produce edge sets far under this; pure-Python union-find with
 # path halving runs ~1M edges/s, so the cap bounds the one task at ~1 s.
-# Overridable for testing/ops via SPARK_GRAFT_LOCAL_CC_MAX_EDGES.
 _LOCAL_CC_MAX_EDGES = 1_000_000
 
 
@@ -473,7 +472,7 @@ def connected_components_star(
     pairs: DataFrame,
     max_iterations: int = 50,
     on_exhausted: str = "raise",
-    local_max_edges: int | None = None,
+    local_max_edges: int = _LOCAL_CC_MAX_EDGES,
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond" — a
@@ -500,8 +499,7 @@ def connected_components_star(
 
     r07 size-adaptive fast path: the distinct edge set is counted off the
     eager checkpoint (a cheap cached scan) and, when it fits
-    ``local_max_edges`` (default ``_LOCAL_CC_MAX_EDGES``, env override
-    ``SPARK_GRAFT_LOCAL_CC_MAX_EDGES``), components resolve in ONE
+    ``local_max_edges``, components resolve in ONE
     single-task union-find job (``_union_find_components`` — exact, same
     min-id contract, differential-tested against the star rounds) instead
     of O(log n) multi-job contraction rounds. Near-dup edge sets are
@@ -511,8 +509,6 @@ def connected_components_star(
     """
     if on_exhausted not in ("raise", "warn"):
         raise ValueError(f"on_exhausted must be 'raise' or 'warn', got {on_exhausted!r}")
-    import os
-
     from pyspark.sql.window import Window
 
     edges = (
@@ -521,12 +517,6 @@ def connected_components_star(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if local_max_edges is None:
-        local_max_edges = int(
-            os.environ.get(
-                "SPARK_GRAFT_LOCAL_CC_MAX_EDGES", str(_LOCAL_CC_MAX_EDGES)
-            )
-        )
     if local_max_edges > 0 and edges.count() <= local_max_edges:
         return _union_find_components(edges)
 

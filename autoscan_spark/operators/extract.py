@@ -86,27 +86,6 @@ _ARROW_SCHEMA = pa.schema(
 )
 
 
-def _extract_rows(conv_ids, turn_idxs, roles, texts, prev_outputs=None):
-    """Shared row loop. ``prev_outputs`` is only used by the serial path."""
-    out = {name: [] for name in _ARROW_SCHEMA.names}
-    for i in range(len(texts)):
-        text = texts[i]
-        prev = prev_outputs[i] if prev_outputs is not None else None
-        extracted, spans, status, kind = extract_turn(text, roles[i], prev)
-        out["conv_id"].append(conv_ids[i])
-        out["turn_idx"].append(turn_idxs[i])
-        out["extracted_text"].append(extracted)
-        out["spans"].append(
-            [{"start": s, "end": e, "kind": k} for s, e, k in spans]
-        )
-        out["status"].append(status)
-        out["kind"].append(kind)
-        out["in_chars"].append(len(text) if text is not None else 0)
-        out["out_chars"].append(len(extracted))
-        out["extractor_version"].append(EXTRACTOR_VERSION)
-    return out
-
-
 def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """Vectorized batch kernel. Hot path discipline (this function dominates
     the 100 TB run): input key columns pass through as Arrow arrays untouched

@@ -9,6 +9,11 @@ table (reference analog of the MERGE-on-conv_id upsert sink, SURVEY.md §2 K1,
 generalizing autoscan/common.py:61-84 + the run summary
 autoscan/autoscan.py:164-191).
 
+Each wave runs ``plans.pipeline.extract_pipeline`` — the one stage order —
+on its bucket slice and caches the extraction: both sinks and the lineage
+counts read that cache, so a wave runs the kernel once and scans its input
+once.
+
 Storage layout (parquet; swaps to Iceberg ``MERGE INTO`` unchanged in shape
 when an Iceberg catalog is configured — the bucket column becomes the Iceberg
 partition spec ``bucket(n, conv_id)``):
@@ -20,7 +25,9 @@ partition spec ``bucket(n, conv_id)``):
 A bucket is COMMITTED iff a lineage row exists for it. Writes use dynamic
 partition overwrite, so re-processing a bucket that was half-written when the
 job died simply replaces it — idempotent resume, no duplicates (verified by
-tests/test_checkpoint.py kill/resume test).
+tests/test_checkpoint_skew.py kill/resume test). A lineage directory that
+exists but cannot be read fails the run instead of reading as "nothing
+committed".
 
 ``waves`` controls how many buckets commit per Spark action: waves=1 is one
 big job (fastest), larger waves give finer resume granularity — the
@@ -48,9 +55,8 @@ from pyspark.sql.types import (
 )
 
 from autoscan_spark import EXTRACTOR_VERSION
-from autoscan_spark.operators.extract import drop_failed, extract_turns
-from autoscan_spark.operators.fold import fold_documents, resolve_fold_strategy
-from autoscan_spark.operators.polish import polish_documents
+from autoscan_spark.operators.fold import resolve_fold_strategy
+from autoscan_spark.plans.pipeline import extract_pipeline
 
 # bump when LINEAGE_SCHEMA changes shape: the lineage dir is append-only
 # parquet, so appending a new schema next to old files would leave a
@@ -138,10 +144,9 @@ class CheckpointedExtraction:
             json.dump(meta, f)
 
     def committed_buckets(self, spark: SparkSession) -> set[int]:
-        try:
-            rows = spark.read.parquet(self.lineage_path).select("partition_id").collect()
-        except Exception:
+        if not os.path.exists(self.lineage_path):
             return set()
+        rows = self.lineage(spark).select("partition_id").collect()
         return {r["partition_id"] for r in rows}
 
     def lineage(self, spark: SparkSession) -> DataFrame:
@@ -178,8 +183,7 @@ class CheckpointedExtraction:
             if max_waves is not None and w // per_wave >= max_waves:
                 break
             wave_buckets = remaining[w : w + per_wave]
-            self._run_wave(spark, transcripts, wave_buckets, two_phase,
-                           wave_id=w // per_wave)
+            self._run_wave(spark, transcripts, wave_buckets, two_phase, w // per_wave)
             committed += len(wave_buckets)
         return committed
 
@@ -188,47 +192,37 @@ class CheckpointedExtraction:
         spark: SparkSession,
         transcripts: DataFrame,
         buckets: list[int],
-        two_phase: bool | None = None,
-        wave_id: int = 0,
+        two_phase: bool,
+        wave_id: int,
     ) -> None:
         t0 = time.perf_counter()
         src = with_bucket(transcripts, self.n_buckets).filter(
             F.col("bucket").isin([int(b) for b in buckets])
         )
-        # cache the wave's extraction output: it feeds three consumers
-        # (extracted sink, fold, lineage counts) — one kernel pass, not three
-        extracted = with_bucket(
-            extract_turns(src, mode=self.mode), self.n_buckets
-        ).cache()
+        extracted, docs = extract_pipeline(
+            src, mode=self.mode, two_phase_fold=two_phase, polish=self.polish
+        )
+        # the cached extraction feeds every output (both sinks and the
+        # lineage counts): one kernel pass and one input scan per wave
+        extracted.cache()
         try:
-            (
-                extracted.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(self.extracted_path)
-            )
-            if two_phase is None:
-                two_phase = resolve_fold_strategy(transcripts, self.two_phase_fold)
-            ok = drop_failed(extracted)
-            docs = fold_documents(ok, two_phase=two_phase).join(
-                ok.select("conv_id", "bucket").distinct(), on="conv_id"
-            )
-            if self.polish:
-                docs = polish_documents(docs)
-            (
-                docs.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(self.docs_path)
-            )
-
-            rows_in = {
-                r["bucket"]: r["count"]
-                for r in src.groupBy("bucket").count().collect()
-            }
-            rows_out = {
-                r["bucket"]: r["count"]
-                for r in ok.groupBy("bucket").count().collect()
+            for df, path in ((extracted, self.extracted_path), (docs, self.docs_path)):
+                (
+                    with_bucket(df, self.n_buckets)
+                    .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("bucket")
+                    .parquet(path)
+                )
+            counts = {
+                r["bucket"]: (r["rows_in"], r["rows_out"])
+                for r in with_bucket(extracted, self.n_buckets)
+                .groupBy("bucket")
+                .agg(
+                    F.count("*").alias("rows_in"),
+                    F.count_if(F.col("status") == "ok").alias("rows_out"),
+                )
+                .collect()
             }
         finally:
             extracted.unpersist()
@@ -238,8 +232,7 @@ class CheckpointedExtraction:
         lineage_rows = [
             (
                 int(b),
-                int(rows_in.get(b, 0)),
-                int(rows_out.get(b, 0)),
+                *counts.get(b, (0, 0)),
                 EXTRACTOR_VERSION,
                 int(wave_id),
                 float(wall),

@@ -1,6 +1,10 @@
 """End-to-end extraction pipeline (the reference's orchestrator, U2:
 autoscan/autoscan.py:19-213, as a DataFrame DAG).
 
+This is the job's one definition of the stage order: every checkpoint wave
+(``plans.checkpoint``, which ``jobs/extract_job.py`` runs) builds its plan
+from it.
+
     transcripts scan (filter pushdown on turn range)
       → extract kernel   (low: mapInArrow, shuffle-free | high: applyInPandas)
       → error handling   (low: drop failed | high: already failed fast)

@@ -110,6 +110,91 @@ def test_lineage_wave_ids_distinguish_commit_groups(spark, transcripts, tmp_path
     assert all(r["wave_wall_s"] > 0 for r in rows)
 
 
+def _file_stamps(root):
+    stamps = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            stamps[os.path.relpath(os.path.join(d, f), root)] = (st.st_size, st.st_mtime_ns)
+    return stamps
+
+
+def test_corrupt_lineage_fails_loudly(spark, transcripts, tmp_path_factory):
+    """An unreadable lineage must fail the run, not read as "nothing
+    committed" and silently reprocess (and rewrite) every bucket."""
+    base = str(tmp_path_factory.mktemp("ckpt_corrupt"))
+    ck = CheckpointedExtraction(root=os.path.join(base, "c"), n_buckets=4)
+    ck.run(transcripts, waves=2, max_waves=1)
+    with open(os.path.join(ck.lineage_path, "part-00000-garbage.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    before = _file_stamps(ck.root)
+
+    with pytest.raises(Exception, match="garbage.parquet"):
+        ck.run(transcripts, waves=2)
+    assert _file_stamps(ck.root) == before
+
+
+def test_high_mode_checkpoint_matches_pipeline(spark, tmp_path_factory):
+    """High mode keeps every turn (it fails fast instead of dropping), and
+    the checkpointed waves must write exactly extract_pipeline's docs."""
+    import pandas as pd
+
+    from autoscan_spark.plans.pipeline import extract_pipeline
+
+    rows = [
+        ("c1", 1, "user", "| a | b |\n|---|---|\n| 1 | 2 |", "", None),
+        ("c1", 2, "user", "| a | b |\n|---|---|\n| 3 | 4 |", "", None),
+        ("c1", 3, "assistant", "done", "", None),
+        ("c2", 1, "user", "<p>hello <b>there</b></p>", "", None),
+        ("c2", 2, "assistant", "```python\nprint(1)\n```", "", None),
+        ("c3", 1, "user", "plain question", "", None),
+        ("c3", 2, "tool", '{"result": 42}', "calc", None),
+        ("c4", 1, "user", "another one", "", None),
+    ]
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
+    )
+    base = str(tmp_path_factory.mktemp("ckpt_high"))
+    ck = CheckpointedExtraction(root=os.path.join(base, "c"), n_buckets=4, mode="high")
+    assert ck.run(df, waves=2) == 4
+
+    _, docs = extract_pipeline(df, mode="high")
+    dcols = ["conv_id", "markdown", "n_turns", "in_chars", "out_chars"]
+    assert _read_sorted(spark, ck.docs_path, dcols) == sorted(
+        tuple(r) for r in docs.select(*dcols).collect()
+    )
+    assert spark.read.parquet(ck.extracted_path).count() == len(rows)
+
+
+def test_wave_docs_read_cached_extraction(spark, transcripts, tmp_path_factory, monkeypatch):
+    """Each wave caches its extraction, so the docs sink reads
+    InMemoryTableScan instead of re-running the kernel stage, and takes its
+    bucket from conv_id instead of joining it back."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = {}
+    write_parquet = DataFrameWriter.parquet
+
+    def recording_parquet(self, path, *args, **kwargs):
+        plans[os.path.basename(path)] = (
+            self._df._jdf.queryExecution().executedPlan().toString()
+        )
+        return write_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
+    base = str(tmp_path_factory.mktemp("ckpt_plan"))
+    CheckpointedExtraction(root=os.path.join(base, "c"), n_buckets=4).run(transcripts)
+
+    plan = plans["doc_markdown"]
+    # the extraction kernel (MapInArrow) must appear only INSIDE the
+    # InMemoryRelation's cached-plan printout, never above the cache
+    # boundary — i.e. the fold reads the cache, not a re-run kernel
+    above_cache = plan.split("InMemoryRelation")[0]
+    assert "InMemoryTableScan" in above_cache
+    assert "MapInArrow" not in above_cache
+    assert "Join" not in plan
+
+
 def test_bucket_is_conv_stable(spark, transcripts):
     """Every conversation maps to exactly one bucket."""
     b = with_bucket(transcripts, 16)

@@ -101,8 +101,10 @@ def test_query_matches_oracle(spark, duck, name):
     assert len(spark_rows) > 0, f"{name}: empty result"
     if sql is None:
         return  # rows-only check
-    oracle_tbl = duck.execute(sql).arrow()
-    oracle_cols = list(oracle_tbl.column_names)
+    # the oracle runs once (fetchall); its Arrow schema comes from a
+    # zero-row bind of the same query, which has the identical schema
+    oracle_schema = duck.execute(f"SELECT * FROM ({sql}) LIMIT 0").arrow().schema
+    oracle_cols = list(oracle_schema.names)
     oracle_rows = duck.execute(sql).fetchall()
     assert list(df.columns) == oracle_cols, f"{name}: column mismatch"
     # Type gate: the driver's value hash is type-sensitive (CORRECTNESS_r03:
@@ -113,7 +115,7 @@ def test_query_matches_oracle(spark, duck, name):
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
     from oracle_gate import _type_skew
 
-    skew = _type_skew(df.toArrow().schema, oracle_tbl.schema)
+    skew = _type_skew(df.toArrow().schema, oracle_schema)
     assert not skew, f"{name}: oracle/spark type skew {skew}"
     assert len(spark_rows) == len(oracle_rows), f"{name}: row count mismatch"
     # compare with columns sorted by name (driver semantics)

@@ -89,26 +89,32 @@ def test_extract_job_polish_checkpointed(spark, tmp_path_factory):
     assert "refusing to mix" in res.stderr
 
 
-def test_no_checkpoint_cache_gives_single_kernel_pass(spark, tmp_path_factory):
-    """The no-checkpoint job caches the extraction output, so the docs fold
-    reads InMemoryTableScan instead of re-running the kernel stage."""
-    from autoscan_spark.plans.pipeline import extract_pipeline
+def test_resume_summary_counts_only_this_runs_turns(spark, tmp_path_factory):
+    """After a resume, the summary's n_turns (and so turns_per_sec) covers
+    only the buckets this run committed, not the whole input."""
+    from autoscan_spark.plans.checkpoint import CheckpointedExtraction
 
-    transcripts = synthesize_transcripts(spark, 5, seed=7)
-    extracted, docs = extract_pipeline(transcripts, mode="low")
-    extracted.cache()
-    try:
-        extracted.count()  # populate, as the job's first write does
-        plan = docs._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryRelation" in plan
-        # the extraction kernel (MapInArrow) must appear only INSIDE the
-        # InMemoryRelation's cached-plan printout, never above the cache
-        # boundary — i.e. the fold reads the cache, not a re-run kernel
-        above_cache = plan.split("InMemoryRelation")[0]
-        assert "InMemoryTableScan" in above_cache
-        assert "MapInArrow" not in above_cache
-    finally:
-        extracted.unpersist()
+    base = str(tmp_path_factory.mktemp("job_resume"))
+    src = os.path.join(base, "transcripts")
+    out = os.path.join(base, "out")
+    synthesize_transcripts(spark, 15, seed=21).write.parquet(src)
+
+    # a killed job: 1 of 2 waves committed, in-process, with the CLI's defaults
+    ck = CheckpointedExtraction(root=out, n_buckets=4)
+    ck.run(spark.read.parquet(src), waves=2, max_waves=1)
+    done = ck.committed_buckets(spark)
+
+    env = dict(os.environ, SPARK_GRAFT_CPUS="4")
+    res = subprocess.run(
+        [sys.executable, os.path.join(REPO_ROOT, "jobs", "extract_job.py"),
+         "--input", src, "--output", out, "--buckets", "4"],
+        capture_output=True, text=True, env=env, check=True,
+    )
+    stats = json.loads(res.stdout.strip().splitlines()[-1])
+    resumed = [r for r in ck.lineage(spark).collect() if r["partition_id"] not in done]
+    assert stats["committed_buckets"] == len(resumed) == 4 - len(done)
+    assert stats["n_turns"] == sum(r["rows_in"] for r in resumed)
+    assert 0 < stats["n_turns"] < spark.read.parquet(src).count()
 
 
 def test_spark_submit_pyfiles_end_to_end(spark, tmp_path_factory):

@@ -321,7 +321,7 @@ def minhash_dedup(
     ).localCheckpoint(eager=False)
     # lazy checkpoint: BOTH verify sides semi-join against this id set,
     # and without the barrier Catalyst re-runs the explode + distinct
-    # exchange per side (r07, guide §2.4 — one candidate-id shuffle, not
+    # exchange per side (r07 — one candidate-id shuffle, not
     # two; the set stays O(duplicate docs))
     ids = pairs.select(
         F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias(id_col)
@@ -1347,8 +1347,8 @@ def fuzzy_dup_pairs(
       itself runs only on surviving candidates.
 
     r07 verifier: candidate distances are computed by the numpy-vectorized
-    Myers bit-parallel kernel (``kernels.editdist.batch_levenshtein``,
-    guide §4.2) instead of a per-pair JVM ``levenshtein(a, b, k)`` call —
+    Myers bit-parallel kernel (``kernels.editdist.batch_levenshtein``)
+    instead of a per-pair JVM ``levenshtein(a, b, k)`` call —
     measured ~54 µs vs ~196 µs per ~300-char pair (the JVM call does
     DP-matrix work per pair; Myers simulates 64 DP rows per word and the
     batch form amortizes dispatch across all pairs in flight). Exactness

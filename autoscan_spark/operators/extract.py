@@ -14,8 +14,10 @@ Two execution strategies, mirroring the reference's accuracy modes
   (reference: sequential loop, autoscan/autoscan.py:257-271; context
   consumption img_to_md_processor.py:56-71). Because turn k's kernel consumes
   turn k-1's OUTPUT, the chain is irreducible per conversation — parallelism
-  comes from conversations, so this is ``groupBy(conv_id).applyInPandas`` (one
-  shuffle) with the group sorted by ``turn_idx``.
+  comes from conversations. The same batch kernel runs with ``serial=True``
+  (the reference's ``sequential`` flag) over partitions hash-partitioned on
+  ``conv_id`` (one shuffle) and sorted by ``(conv_id, turn_idx)``, so each
+  conversation arrives as one ordered run of rows.
 
 Error semantics (reference X3, autoscan/autoscan.py:250-255,283-289):
 - low mode: failures become ``status='error:...'`` rows; ``drop_failed``
@@ -26,12 +28,13 @@ Error semantics (reference X3, autoscan/autoscan.py:250-255,283-289):
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -68,36 +71,31 @@ EXTRACTED_SCHEMA = StructType(
     ]
 )
 
-_ARROW_SPAN_TYPE = pa.list_(
-    pa.struct([("start", pa.int32()), ("end", pa.int32()), ("kind", pa.string())])
-)
-_ARROW_SCHEMA = pa.schema(
-    [
-        ("conv_id", pa.string()),
-        ("turn_idx", pa.int32()),
-        ("extracted_text", pa.string()),
-        ("spans", _ARROW_SPAN_TYPE),
-        ("status", pa.string()),
-        ("kind", pa.string()),
-        ("in_chars", pa.int64()),
-        ("out_chars", pa.int64()),
-        ("extractor_version", pa.string()),
-    ]
-)
+_ARROW_SCHEMA = to_arrow_schema(EXTRACTED_SCHEMA)
 
 
-def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _extract_batches(
+    batches: Iterator[pa.RecordBatch], serial: bool = False
+) -> Iterator[pa.RecordBatch]:
     """Vectorized batch kernel. Hot path discipline (this function dominates
     the 100 TB run): input key columns pass through as Arrow arrays untouched
     (zero copy); only role/text cross into Python; output arrays are built
     natively (ListArray.from_arrays for spans) — no from_pydict, no pandas;
-    char counters come from Arrow compute, not Python len()."""
+    char counters come from Arrow compute, not Python len().
+
+    ``serial`` is the reference's ``sequential`` flag
+    (autoscan/autoscan.py:257-289): rows must arrive sorted by
+    ``(conv_id, turn_idx)``; each turn gets the previous turn's output as
+    context while ``conv_id`` is unchanged (carried across Arrow batches), and
+    the first failed turn raises so the job fails fast."""
     import pyarrow.compute as pc
 
-    span_fields = list(_ARROW_SPAN_TYPE.value_type)
+    span_fields = list(_ARROW_SCHEMA.field("spans").type.value_type)
+    prev_conv_id = prev_output = context = None
     for batch in batches:
         texts = batch.column("text").to_pylist()
         roles = batch.column("role").to_pylist()
+        conv_ids = batch.column("conv_id").to_pylist() if serial else None
         n = len(texts)
         out_texts = [None] * n
         statuses = [None] * n
@@ -107,7 +105,17 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
         ends: list[int] = []
         span_kinds: list[str] = []
         for i in range(n):
-            extracted, spans, status, kind = extract_turn(texts[i], roles[i])
+            if serial:
+                context = prev_output if conv_ids[i] == prev_conv_id else None
+            extracted, spans, status, kind = extract_turn(texts[i], roles[i], context)
+            if serial:
+                if status != "ok":
+                    raise RuntimeError(
+                        f"extraction failed in high (sequential) mode for "
+                        f"conv_id={conv_ids[i]} "
+                        f"turn_idx={batch.column('turn_idx')[i].as_py()}: {status}"
+                    )
+                prev_conv_id, prev_output = conv_ids[i], extracted
             out_texts[i] = extracted
             statuses[i] = status
             kinds[i] = kind
@@ -147,61 +155,6 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
         )
 
 
-_SERIAL_RESULT_TYPE = (
-    "array<struct<turn_idx:int,extracted_text:string,"
-    "spans:array<struct<start:int,end:int,kind:string>>,"
-    "status:string,kind:string,in_chars:bigint,out_chars:bigint>>"
-)
-
-
-def _serial_extract_udf():
-    """High-mode kernel as ONE vectorized pandas_udf over per-conversation
-    turn arrays (same agg+udf physical shape as the fold — a grouped
-    applyInPandas pays per-tiny-group pandas overhead; this pays it per
-    Arrow batch of conversations).
-
-    Fail-fast on the first kernel error, like the reference's sequential
-    mode (autoscan/autoscan.py:250-255); the conv_id travels alongside so
-    the error names the failing conversation/turn.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(_SERIAL_RESULT_TYPE)
-    def run_serial(conv_ids: pd.Series, turns: pd.Series) -> pd.Series:
-        out = []
-        for conv_id, ts in zip(conv_ids, turns):
-            prev_output = None
-            rows = []
-            for t in ts:  # already sorted by turn_idx via array_sort
-                text = t["text"]
-                extracted, spans, status, kind = extract_turn(
-                    text, t["role"], prev_output
-                )
-                if status != "ok":
-                    raise RuntimeError(
-                        f"extraction failed in high (sequential) mode for "
-                        f"conv_id={conv_id} turn_idx={t['turn_idx']}: {status}"
-                    )
-                rows.append(
-                    {
-                        "turn_idx": t["turn_idx"],
-                        "extracted_text": extracted,
-                        "spans": [
-                            {"start": s, "end": e, "kind": k} for s, e, k in spans
-                        ],
-                        "status": status,
-                        "kind": kind,
-                        "in_chars": len(text) if text is not None else 0,
-                        "out_chars": len(extracted),
-                    }
-                )
-                prev_output = extracted
-            out.append(rows)
-        return pd.Series(out)
-
-    return run_serial
-
-
 def extract_turns(
     df: DataFrame,
     mode: str = "low",
@@ -225,28 +178,13 @@ def extract_turns(
     cols = df.select("conv_id", "turn_idx", "role", "text")
     if mode == "low":
         return cols.mapInArrow(_extract_batches, schema=EXTRACTED_SCHEMA)
-
-    grouped = cols.groupBy("conv_id").agg(
-        F.array_sort(F.collect_list(F.struct("turn_idx", "role", "text"))).alias(
-            "__turns"
-        )
-    )
-    results = grouped.select(
-        "conv_id",
-        F.explode(_serial_extract_udf()(F.col("conv_id"), F.col("__turns"))).alias(
-            "__r"
-        ),
-    )
-    return results.select(
-        "conv_id",
-        F.col("__r.turn_idx").alias("turn_idx"),
-        F.col("__r.extracted_text").alias("extracted_text"),
-        F.col("__r.spans").alias("spans"),
-        F.col("__r.status").alias("status"),
-        F.col("__r.kind").alias("kind"),
-        F.col("__r.in_chars").alias("in_chars"),
-        F.col("__r.out_chars").alias("out_chars"),
-        F.lit(EXTRACTOR_VERSION).alias("extractor_version"),
+    # repartition, not rebalance: AQE may coalesce REPARTITION_BY_COL
+    # partitions but never splits them, so a conversation stays in one
+    # sorted partition.
+    return (
+        cols.repartition("conv_id")
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .mapInArrow(partial(_extract_batches, serial=True), schema=EXTRACTED_SCHEMA)
     )
 
 

@@ -251,7 +251,7 @@ def token_budget_sample(
     # (bucket, offset) STRUCT picks the offset AT the min bucket in the
     # same pass (struct ordering is lexicographic and bucket ids are
     # unique per stratum), so one aggregate yields all four values —
-    # bit-identical per-stratum rows, 4 input scans → 2 (guide §2.4).
+    # bit-identical per-stratum rows, 4 input scans → 2.
     # At __bb the bucket sum is provably non-null (a null-sum bucket
     # carries its predecessor's cumulative total, so the predecessor would
     # have crossed the budget first); coalesce kept for exact parity with

@@ -108,7 +108,7 @@ def _blocked_exact_candidates(
     n_blocks: int = 16,
 ) -> DataFrame:
     """All-pairs cosine candidates >= threshold - margin, computed as numpy
-    block matmuls (guide §4.2) instead of per-pair interpreted JVM folds.
+    block matmuls instead of per-pair interpreted JVM folds.
 
     Distributed blocked all-pairs: each row lands in block ``pmod(xxhash64(
     id), B)`` and is replicated to the B block-pair groups containing its
@@ -635,7 +635,7 @@ def _centroids_from_sample(
     matrix ships to executors in the assignment-UDF closure. Corpus
     ASSIGNMENT stays fully distributed."""
     sample_n = n_cells if kmeans_iterations == 0 else _KMEANS_TRAIN_FACTOR * n_cells
-    # Arrow driver transfer (guide §6): .collect() deserializes nested
+    # Arrow driver transfer: .collect() deserializes nested
     # float arrays through the pickled-row path (~0.3 ms/row — measured
     # 0.6-0.8 s for a 2000-row sample); .toPandas() rides Arrow. The
     # scan is additionally _spread first: the sort key renders every
@@ -860,7 +860,7 @@ def knn_label_noise(
     internally; now the size is GUARDED, see below) and each corpus Arrow
     batch scores ALL queries with one numpy matmul, emitting only its
     batch-local top-k candidate ids per query with a rounding-safe margin
-    (guide §4.2 — this replaces ~|corpus|×|queries| interpreted JVM dot
+    (this replaces ~|corpus|×|queries| interpreted JVM dot
     folds inside a BroadcastNestedLoopJoin, measured 2.85 s → ~0.8 s at
     sf0.1). The surviving candidates (≈ k per query per batch) are then
     rescored with the ORIGINAL JVM fold expression, so the final rounded
@@ -891,7 +891,7 @@ def knn_label_noise(
     max_queries = 200_000
     # guard BEFORE any unbounded collect: pull at most max_queries+1 rows
     # (no separate count job) and refuse past the bound; Arrow transfer
-    # (guide §6) — the pickled-row path costs ~0.3 ms/row on array cells
+    # — the pickled-row path costs ~0.3 ms/row on array cells
     q_pdf = (
         queries.select(F.col(id_col), F.col(vec_col))
         .limit(max_queries + 1)

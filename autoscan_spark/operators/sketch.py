@@ -409,9 +409,8 @@ def bloom_contamination(
     Shape (r07): the benchmark side reduces to an actual in-memory BITSET
     — ``bloom_bits`` is hard-capped at ``bits`` rows by construction
     (2^18 default → a 32 KB bitmap), so it is collected once and shipped
-    to executors in the probe-kernel closure, the guide §3.2 "build the
-    Bloom filter, broadcast it, drop non-members before any shuffle"
-    pattern made literal. Each corpus gram (already DISTINCT per doc via
+    to executors in the probe-kernel closure: build the Bloom filter,
+    broadcast it, and drop non-members before any shuffle. Each corpus gram (already DISTINCT per doc via
     ``shingle_expr``) is flagged by ONE vectorized numpy bitmap lookup
     over its ``k`` positions; the per-doc rollup is then a single
     map-side-combinable groupBy(doc) of (doc, int) rows. Compared to the

@@ -357,7 +357,7 @@ def rolling_active_users(
     Output: (``day`` 'yyyy-MM-dd' string, ``n_active_users`` bigint).
     """
     reject_reserved(df, ("__d", "__u"), "rolling_active_users")
-    # r07 shape (guide §2.4): ONE pass. posexplode offset 0 marks the
+    # r07 shape: ONE pass. posexplode offset 0 marks the
     # REAL active day, so the corpus max day is recoverable from the
     # days-sized aggregate itself (max over days that contain an
     # offset-0 user) — the r06 separate max-day aggregate re-ran the
@@ -419,7 +419,7 @@ def stickiness(
     bigint, ``stickiness_ppm`` bigint).
     """
     reject_reserved(df, ("__d", "__u"), "stickiness")
-    # r07 shape (guide §2.4): ONE pass. posexplode offset 0 IS the DAU
+    # r07 shape: ONE pass. posexplode offset 0 IS the DAU
     # row, so DAU and WAU come out of a single (day) groupBy
     # (dau = distinct offset-0 users, wau = distinct visible users); a
     # day appears in the output iff dau >= 1 — exactly the r06 inner
@@ -474,7 +474,7 @@ def funnel_within(
     product-analytics definition, stricter than ``funnel_counts``'s
     any-time ordering).
 
-    Shape (r07, guide §2.4): ONE pass. Step k's qualifying time is a
+    Shape (r07): ONE pass. Step k's qualifying time is a
     chained conditional min() window over the SAME user partitioning —
     ``__s{k} = min(ts WHERE type = step_k AND __s{k-1} < ts <=
     __s{k-1} + within) OVER (PARTITION BY user)`` — so consecutive

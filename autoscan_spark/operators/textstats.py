@@ -1148,8 +1148,8 @@ def tfidf_top_terms(
     re-evaluation of the scan → explode → (doc, term) aggregate chain
     (no common-subexpression reuse across the two aggregates: two parquet
     scans, two explodes, 4 exchanges); the window form shares one chain
-    (guide §2.4 "two operations keyed the same way can share one
-    exchange"). df = row-count of tf per term either way — bit-identical.
+    (two operations keyed the same way can share one
+    exchange). df = row-count of tf per term either way — bit-identical.
     No corpus-sized join and nothing quadratic; skew on hot terms is
     defused by the (doc, term) partial aggs feeding the window.
 

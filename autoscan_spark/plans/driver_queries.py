@@ -3043,12 +3043,12 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact join); nation/region dims broadcast; exact integer cents, ppm
     by integer division → bit-stable cross-engine.
 
-    r07 plan shape (guide §2.3/§8): the r06 formulation shuffled the
+    r07 plan shape: the r06 formulation shuffled the
     lineitem ⋈ orders FACT intermediate twice — by o_custkey for the
     customer semi-filter and again by l_suppkey for the supplier join
     (the planner's post-join size estimates are inflated, so neither
     small side auto-broadcast). Now (a) the ASIA customer keyset — pure
-    c_custkey ints, the guide-§8 "broadcast the plan" shape, ~240 MB at
+    c_custkey ints, small enough to broadcast, ~240 MB at
     sf100k (region keeps 1/5 of customers) — carries an explicit
     broadcast hint, and (b) revenue is pre-aggregated per
     (l_suppkey, o_year) BEFORE the supplier join (integer sums
@@ -3322,7 +3322,7 @@ def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose quantity is below 20% of their part's average. The brand dim
     filter broadcasts BEFORE the fact scan (only Brand#12 lineitems ever
     shuffle); the per-part totals are a window over the SAME restricted
-    frame (r07, guide §2.4: the r06 groupBy + join-back re-evaluated the
+    frame (r07: the r06 groupBy + join-back re-evaluated the
     brand join from a second lineitem scan and planned a SortMergeJoin;
     the window shares one partkey exchange — 2 fact scans → 1, join
     gone). Exact-integer inequality 5*qty*cnt < total_qty (quantities

@@ -5,16 +5,19 @@ This is the job's one definition of the stage order: every checkpoint wave
 (``plans.checkpoint``, which ``jobs/extract_job.py`` runs) builds its plan
 from it.
 
-    transcripts scan (filter pushdown on turn range)
-      → extract kernel   (low: mapInArrow, shuffle-free | high: applyInPandas)
+    transcripts scan (a caller's turn-range filter pushes down into it)
+      → extract kernel   (mapInArrow; low: shuffle-free | high: serial over
+                          conv_id-partitioned, turn-sorted partitions)
       → error handling   (low: drop failed | high: already failed fast)
       → ordered fold     (one shuffle; two-phase for skewed conversations)
       → optional polish  (second per-document kernel pass with fallback)
 
 Plan shape at scale: low mode has exactly ONE shuffle (the fold's groupBy);
-high mode has exactly ONE shuffle (the groupBy feeding the serial kernel —
-the fold reuses the same hash partitioning on conv_id, so Catalyst does not
-re-shuffle between extract and fold).
+high mode has TWO — the repartition feeding the serial kernel, and the fold's
+groupBy. The kernel's output does not advertise the conv_id partitioning, so
+Catalyst cannot elide the second; its partial aggregation completes within
+the already conversation-grouped partitions, so it moves one row per
+conversation, not raw turns.
 """
 
 from __future__ import annotations
@@ -31,8 +34,6 @@ from autoscan_spark.operators.polish import polish_documents
 def extract_pipeline(
     transcripts: DataFrame,
     mode: str = "low",
-    first_turn: int | None = None,
-    last_turn: int | None = None,
     two_phase_fold=False,
     fold_chunk_size: int = 1024,
     polish: bool = False,
@@ -51,9 +52,7 @@ def extract_pipeline(
     two_phase = resolve_fold_strategy(
         transcripts, two_phase_fold, chunk_size=fold_chunk_size
     )
-    extracted = extract_turns(
-        transcripts, mode=mode, first_turn=first_turn, last_turn=last_turn
-    )
+    extracted = extract_turns(transcripts, mode=mode)
     ok = drop_failed(extracted) if mode == "low" else extracted
     docs = fold_documents(ok, two_phase=two_phase, chunk_size=fold_chunk_size)
     if polish:

@@ -283,7 +283,7 @@ def synthesize_transcripts(
 ) -> DataFrame:
     """Distributed fixture corpus: `n_convs` conversations, mixed payload
     classes; optionally one pathological `skew_conv_turns`-turn conversation
-    (conv_num = n_convs) to exercise the salting path.
+    (conv_num = n_convs) to exercise the two-phase fold path.
 
     Generation is per-conversation seeded → identical output at any
     parallelism or partitioning.

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from autoscan_spark.operators.extract import drop_failed, extract_turns
 from autoscan_spark.operators.fold import fold_documents
 from autoscan_spark.plans.checkpoint import CheckpointedExtraction, with_bucket
-from autoscan_spark.plans.salting import partition_sizes, salted_repartition
 from autoscan_spark.sources.transcripts import synthesize_transcripts
 
 N_CONVS = 40
@@ -205,30 +204,6 @@ def test_bucket_is_conv_stable(spark, transcripts):
 # ---------------- skew ----------------
 
 
-def test_salted_repartition_bounds_skew(spark):
-    """One 5000-turn conversation among 1-turn conversations: salting must
-    spread the monster across partitions."""
-    skewed = synthesize_transcripts(
-        spark, 40, seed=3, skew_conv_turns=5000
-    )
-    from pyspark.sql import functions as F
-
-    salted = salted_repartition(skewed, 32, salts=16)
-    sizes = partition_sizes(salted)
-    total = sum(sizes)
-    assert total == skewed.count()
-
-    # unsalted baseline: repartition by conv_id puts all 5000 monster turns
-    # in ONE partition
-    unsalted_sizes = partition_sizes(skewed.repartition(32, F.col("conv_id")))
-    assert max(unsalted_sizes) >= 5000
-
-    # salted: the monster is spread over up to 16 salt groups; even with
-    # group→partition hash collisions no partition should hold more than a
-    # quarter of it
-    assert max(sizes) <= 5000 / 4, f"sizes={sorted(sizes, reverse=True)[:5]}"
-
-
 def test_two_phase_fold_on_skewed_conversation(spark):
     skewed = synthesize_transcripts(spark, 10, seed=3, skew_conv_turns=3000)
     extracted = drop_failed(extract_turns(skewed, mode="low")).cache()
@@ -276,25 +251,6 @@ def test_pipeline_auto_fold_output_invariant(spark):
     a = {r["conv_id"]: r["markdown"] for r in auto_docs.collect()}
     f = {r["conv_id"]: r["markdown"] for r in flat_docs.collect()}
     assert a == f
-
-
-def test_salted_extraction_identical_results(spark):
-    """Salting changes physical partitioning only — extraction output must be
-    identical with and without it."""
-    from autoscan_spark.operators.extract import extract_turns
-
-    tr = synthesize_transcripts(spark, 30, seed=9)
-    plain = {
-        (r["conv_id"], r["turn_idx"]): (r["extracted_text"], r["status"])
-        for r in extract_turns(tr, mode="low").collect()
-    }
-    salted = {
-        (r["conv_id"], r["turn_idx"]): (r["extracted_text"], r["status"])
-        for r in extract_turns(
-            salted_repartition(tr, 16, salts=8), mode="low"
-        ).collect()
-    }
-    assert plain == salted
 
 
 def test_resume_refuses_old_lineage_schema(spark, tmp_path_factory):

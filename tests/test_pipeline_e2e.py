@@ -8,6 +8,7 @@ under shuffles, mode behavior, error handling, fold equivalence.
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from autoscan_spark.kernels.dispatch import extract_turn
 from autoscan_spark.kernels.pagejoin import join_pages
@@ -26,20 +27,18 @@ N_CONVS = 33  # 3 conversations per payload class
 @pytest.fixture(scope="module")
 def transcripts(spark):
     # shuffled row order: never rely on storage order
-    from pyspark.sql import functions as F
-
     df = synthesize_transcripts(spark, N_CONVS, seed=42).orderBy(F.rand(7))
     df = df.cache()
     df.count()
     return df
 
 
-def _golden_rows(n_convs, mode):
-    """Driver-side oracle: pure kernels over the same generated fixtures."""
+def _golden_rows(conversations, mode):
+    """Driver-side oracle: pure kernels over the same fixture rows, one
+    conversation (list of rows in turn order) at a time."""
     per_turn = {}
     per_doc = {}
-    for conv_num in range(n_convs):
-        rows = gen_conversation(conv_num, seed=42)
+    for rows in conversations:
         prev = None
         outs = []
         for conv_id, turn_idx, role, text, _tool, _ts in rows:
@@ -62,7 +61,9 @@ def _golden_rows(n_convs, mode):
 
 
 def test_low_mode_matches_golden(spark, transcripts):
-    per_turn, per_doc = _golden_rows(N_CONVS, "low")
+    per_turn, per_doc = _golden_rows(
+        (gen_conversation(c, seed=42) for c in range(N_CONVS)), "low"
+    )
 
     extracted, docs = extract_pipeline(transcripts, mode="low")
     got_turns = {
@@ -99,6 +100,54 @@ def test_high_mode_serial_context(spark):
     assert texts[3] == "| 5 | 6 |"
     md = docs.collect()[0]["markdown"]
     assert md == "| a | b |\n|---|---|\n| 1 | 2 |\n| 3 | 4 |\n| 5 | 6 |"
+
+
+def _context_conversation(conv_num):
+    """Five turns where lag-1 context rewrites two: a repeated heading (turn
+    2) and a table continuation (turn 4). The last turn's output opens with
+    the heading that every conversation's first turn repeats, so context
+    leaking across a conversation boundary would rewrite that first turn."""
+    table = "| a | b |\n|---|---|\n| {} | {} |"
+    texts = [
+        f"# Report\n\nintro {conv_num}",
+        f"# Report\n\nmore {conv_num}",
+        table.format(1, conv_num),
+        table.format(2, conv_num),
+        "# Report\n\n" + table.format(3, conv_num),
+    ]
+    return [(f"k{conv_num:03d}", i + 1, "user", t, "", None)
+            for i, t in enumerate(texts)]
+
+
+def test_high_mode_context_across_arrow_batches(spark):
+    """High mode carries context across Arrow batch boundaries and resets it
+    at conversation boundaries: 2-row batches split every conversation, and
+    the output must match the serial reference loop turn for turn."""
+    conversations = [_context_conversation(c) for c in range(24)]
+    rows = [r for conv in conversations for r in conv]
+    per_turn, per_doc = _golden_rows(conversations, "high")
+    rewritten = [r for r in rows if per_turn[r[:2]][0] != r[3]]
+    assert len(rewritten) == 2 * len(conversations)
+    leaked = extract_turn(rows[0][3], "user", per_turn[rows[4][:2]][0])[0]
+    assert leaked != rows[0][3]  # the leak trap would fire
+
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
+    ).orderBy(F.rand(3))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        extracted, docs = extract_pipeline(df, mode="high")
+        got_turns = {
+            (r["conv_id"], r["turn_idx"]): (r["extracted_text"], r["status"])
+            for r in extracted.collect()
+        }
+        got_docs = {r["conv_id"]: r["markdown"] for r in docs.collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert got_turns == per_turn
+    assert got_docs == per_doc
 
 
 def test_high_mode_fails_fast_on_error(spark):

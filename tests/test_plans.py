@@ -55,12 +55,13 @@ def test_low_pipeline_has_exactly_one_shuffle(spark, tmp_path_factory):
 
 
 def test_high_pipeline_shuffle_budget(spark, tmp_path_factory):
-    """High mode: exactly TWO exchanges — one grouping raw turns for the
-    serial kernel, one for the fold agg. The second is cheap in rows: the
-    fold's partial aggregation (collect_list) completes within the already
-    conversation-grouped partitions, so it moves ONE row per conversation,
-    not raw turns. (applyInPandas output does not advertise partitioning, so
-    Catalyst cannot elide it outright.)"""
+    """High mode: exactly TWO exchanges — one repartitioning raw turns by
+    conv_id for the serial kernel, one for the fold agg. The second is cheap
+    in rows: the fold's partial aggregation (collect_list) completes within
+    the already conversation-grouped partitions, so it moves ONE row per
+    conversation, not raw turns. (The mapInArrow output does not advertise
+    the conv_id partitioning, so Catalyst cannot elide it outright.) The
+    kernel is the low-mode Arrow batch kernel, not a second UDF shape."""
     path = str(tmp_path_factory.mktemp("plan4")) + "/t"
     synthesize_transcripts(spark, 20, seed=4).filter(
         ~F.col("conv_id").endswith("-error")
@@ -71,6 +72,11 @@ def test_high_pipeline_shuffle_budget(spark, tmp_path_factory):
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 2, f"expected 2 shuffles, got {n_exchanges}:\n{plan}"
     assert "partial_" in plan  # map-side partial aggregation present
+    # the extraction is one MapInArrow; the only pandas UDF is the fold's
+    extract_plan = _executed_plan(extract_turns(tr, mode="high"))
+    assert "MapInArrow" in extract_plan, extract_plan
+    assert "ArrowEvalPython" not in extract_plan, extract_plan
+    assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def test_broadcast_join_for_small_dimension(spark, sf_dir):

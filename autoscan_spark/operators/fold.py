@@ -4,21 +4,27 @@ Reference contract: ``_join_markdown_pages`` (autoscan/autoscan.py:353-383) —
 empty-page filtering and the adjacency-dependent separator must happen inside
 ONE ordered fold (the separator depends on post-filter neighbors).
 
-Physical design (chosen by measurement — see BENCH/BASELINE.md): the fold is
-a JVM-side ``groupBy(conv_id).agg(array_sort(collect_list(struct(turn_idx,
-extracted_text))))`` followed by ONE Arrow-vectorized ``pandas_udf`` that
-applies the pure fold kernel per conversation. This beats a grouped
-``applyInPandas`` by ~10× on many-small-conversation workloads: grouping and
-sorting stay in Tungsten, and Python sees one Arrow batch of conversations
-instead of one pandas DataFrame per group.
+Physical design: the fold is pure Catalyst — no Python worker. One map-side
+projection cleans each page (``replace`` the ``---PAGE BREAK---`` marker,
+then ``rtrim`` the ``str.isspace()`` set) and keeps a page only if it is
+non-empty, as a ``struct(k, text)`` run; ``collect_list`` skips the dropped
+(NULL) runs while ``count(*)`` still counts every turn. After
+``groupBy(conv_id)``, ``array_sort`` orders the runs and one ``transform`` +
+``array_join`` applies the separator rule (``_join``), the same shape as
+``conversations.render_chat_template``. The trim set is spelled out because
+Spark's one-argument ``rtrim`` strips only ASCII spaces, while the
+reference's ``str.rstrip()`` strips all 29 ``str.isspace()`` code points.
 
 Scale note (100 TB): a conversation's turns must fit in one aggregation
 buffer for the flat fold. For pathologically long conversations
-``two_phase=True`` runs the algebraically-equivalent two-level fold
-(kernels.pagejoin.fold_chunk / combine_chunks): chunks of ``chunk_size``
-turns fold in parallel keyed by (conv_id, chunk_id) — spreading a skewed
-conversation over many tasks — then a second, tiny shuffle combines boundary
--exact chunk summaries per conversation. Equivalence is property-tested in
+``two_phase=True`` applies the same ``_join`` twice: chunks of
+``chunk_size`` turns fold in parallel keyed by (conv_id, chunk_id) —
+spreading a skewed conversation over many tasks — into ``(k, text, first,
+last)`` summaries (NULL when no page survives, so the chunk vanishes), then a
+second, tiny shuffle joins the chunks per conversation, taking each
+separator from the previous chunk's last and the next chunk's first
+surviving page — exactly the adjacency the flat fold sees. Equivalence with
+``kernels.pagejoin.join_pages`` is differential-tested in
 tests/test_pagejoin.py and distribution-tested in tests/test_checkpoint_skew.py.
 
 ``n_turns`` counts the successfully extracted turns entering the fold
@@ -28,10 +34,8 @@ autoscan/autoscan.py:165,174), i.e. BEFORE empty-page filtering.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -40,7 +44,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from autoscan_spark.kernels.pagejoin import ChunkFold, combine_chunks, fold_chunk, join_pages
+from autoscan_spark.kernels.pagejoin import PAGE_BREAK
 
 DOC_SCHEMA = StructType(
     [
@@ -52,52 +56,35 @@ DOC_SCHEMA = StructType(
     ]
 )
 
-
-# pandas_udf objects are created lazily (inside fold_documents): decorating at
-# module import time requires an active SparkSession to parse the return type.
-
-
-def _fold_turns_udf():
-    @pandas_udf("string")
-    def fold_turns(turns: pd.Series) -> pd.Series:
-        # each element: list of {"turn_idx": int, "extracted_text": str}
-        # dicts, already sorted by turn_idx via array_sort on the struct
-        return turns.map(lambda ts: join_pages([t["extracted_text"] for t in ts]))
-
-    return fold_turns
+# {c for c in all code points if c.isspace()}: what the reference's
+# str.rstrip() removes (pinned by tests/test_pagejoin.py)
+_PY_WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680\u2000\u2001\u2002\u2003"
+    "\u2004\u2005\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f\u205f\u3000"
+)
 
 
-def _fold_chunk_udf():
-    @pandas_udf("struct<text:string,first_page:string,last_page:string>")
-    def fold_one_chunk(turns: pd.Series) -> pd.DataFrame:
-        texts, firsts, lasts = [], [], []
-        for ts in turns:
-            chunk = fold_chunk([t["extracted_text"] for t in ts])
-            texts.append(chunk.text if chunk else None)
-            firsts.append(chunk.first_page if chunk else None)
-            lasts.append(chunk.last_page if chunk else None)
-        return pd.DataFrame(
-            {"text": texts, "first_page": firsts, "last_page": lasts}
-        )
+def _join(runs: Column, first: str, last: str) -> Column:
+    """Join sorted ``(k, text, ...)`` runs; the separator before run i is
+    ``"\\n"`` iff run i-1's ``last`` page ends with ``|`` and run i's
+    ``first`` page starts with ``|``, else ``"\\n\\n"``."""
 
-    return fold_one_chunk
+    def piece(r: Column, i: Column) -> Column:
+        table = runs[i - 1][last].endswith("|") & r[first].startswith("|")
+        sep = F.when(table, F.lit("\n")).otherwise(F.lit("\n\n"))
+        return F.when(i == 0, r["text"]).otherwise(F.concat(sep, r["text"]))
+
+    return F.array_join(F.transform(runs, piece), "")
 
 
-def _combine_chunks_udf():
-    @pandas_udf("string")
-    def combine_chunk_folds(chunks: pd.Series) -> pd.Series:
-        def combine(cs) -> str:
-            folds = [
-                ChunkFold(c["text"], c["first_page"], c["last_page"])
-                if c["text"] is not None
-                else None
-                for c in cs
-            ]
-            return combine_chunks(folds)
-
-        return chunks.map(combine)
-
-    return combine_chunk_folds
+def _fold(rows: DataFrame, keys: list, n_turns: Column) -> DataFrame:
+    """``groupBy(keys)``: the sorted non-NULL ``run`` structs and the counts."""
+    return rows.groupBy(*keys).agg(
+        F.array_sort(F.collect_list("run")).alias("runs"),
+        n_turns.cast("int").alias("n_turns"),
+        F.sum("in_chars").cast("long").alias("in_chars"),
+        F.sum("out_chars").cast("long").alias("out_chars"),
+    )
 
 
 def resolve_fold_strategy(
@@ -151,66 +138,42 @@ def fold_documents(
     Input must contain conv_id, turn_idx, extracted_text, in_chars, out_chars
     (failed rows should already be dropped / have failed the job).
     """
-    cols = extracted.select(
-        "conv_id", "turn_idx", "extracted_text", "in_chars", "out_chars"
+    page = F.rtrim(
+        F.replace("extracted_text", F.lit(PAGE_BREAK), F.lit("")),
+        F.lit(_PY_WHITESPACE),
     )
-    if not two_phase:
-        agg = cols.groupBy("conv_id").agg(
-            F.array_sort(
-                F.collect_list(F.struct("turn_idx", "extracted_text"))
-            ).alias("__turns"),
-            F.count("*").cast("int").alias("n_turns"),
-            F.sum("in_chars").cast("long").alias("in_chars"),
-            F.sum("out_chars").cast("long").alias("out_chars"),
-        )
-        return agg.select(
-            "conv_id",
-            _fold_turns_udf()(F.col("__turns")).alias("markdown"),
-            "n_turns",
-            "in_chars",
-            "out_chars",
-        )
-
-    chunked = cols.withColumn(
-        "chunk_id", ((F.col("turn_idx") - F.lit(1)) / F.lit(chunk_size)).cast("long")
-    )
-    chunk_folds = (
-        chunked.groupBy("conv_id", "chunk_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("turn_idx", "extracted_text"))
-            ).alias("__turns"),
-            F.count("*").cast("int").alias("n_turns"),
-            F.sum("in_chars").cast("long").alias("in_chars"),
-            F.sum("out_chars").cast("long").alias("out_chars"),
-        )
-        .select(
-            "conv_id",
-            "chunk_id",
-            _fold_chunk_udf()(F.col("__turns")).alias("__chunk"),
-            "n_turns",
-            "in_chars",
-            "out_chars",
-        )
-    )
-    combined = chunk_folds.groupBy("conv_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    "chunk_id",
-                    F.col("__chunk.text").alias("text"),
-                    F.col("__chunk.first_page").alias("first_page"),
-                    F.col("__chunk.last_page").alias("last_page"),
-                )
-            )
-        ).alias("__chunks"),
-        F.sum("n_turns").cast("int").alias("n_turns"),
-        F.sum("in_chars").cast("long").alias("in_chars"),
-        F.sum("out_chars").cast("long").alias("out_chars"),
-    )
-    return combined.select(
+    # page is its own projection so Catalyst evaluates it once, not per use
+    rows = extracted.withColumn("page", page).select(
         "conv_id",
-        _combine_chunks_udf()(F.col("__chunks")).alias("markdown"),
+        "turn_idx",
+        F.when(
+            F.col("page") != "",
+            F.struct(F.col("turn_idx").alias("k"), F.col("page").alias("text")),
+        ).alias("run"),
+        "in_chars",
+        "out_chars",
+    )
+    n_turns, first, last = F.count("*"), "text", "text"
+    if two_phase:
+        chunk_id = ((F.col("turn_idx") - 1) / chunk_size).cast("long")
+        chunks = _fold(rows.withColumn("chunk_id", chunk_id), ["conv_id", "chunk_id"], n_turns)
+        run = F.struct(
+            F.col("chunk_id").alias("k"),
+            _join(F.col("runs"), "text", "text").alias("text"),
+            F.col("runs")[0]["text"].alias("first"),
+            F.element_at("runs", -1)["text"].alias("last"),
+        )
+        rows = chunks.select(
+            "conv_id",
+            F.when(F.size("runs") > 0, run).alias("run"),
+            "n_turns",
+            "in_chars",
+            "out_chars",
+        )
+        n_turns, first, last = F.sum("n_turns"), "first", "last"
+    return _fold(rows, ["conv_id"], n_turns).select(
+        "conv_id",
+        _join(F.col("runs"), first, last).alias("markdown"),
         "n_turns",
         "in_chars",
         "out_chars",

@@ -156,9 +156,10 @@ FROM tr"""
 
 
 def q_doc_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1: the real distributed ordered fold (applyInPandas), cross-checked
-    against an independent pure-SQL implementation of the same adjacency
-    -dependent separator rule."""
+    """A1: the real distributed ordered fold (pure Catalyst: sorted
+    ``collect_list`` + ``transform``/``array_join``), cross-checked against
+    an independent pure-SQL implementation of the same adjacency-dependent
+    separator rule (window ``lag`` + ``string_agg``)."""
     tr = transcripts_from_documents(spark, sf_dir)
     extracted = drop_failed(extract_turns(tr, mode="low"))
     return fold_documents(extracted).select("conv_id", "markdown")
@@ -789,11 +790,13 @@ def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs over documents (banded LSH + exact verify).
 
     Oracle-backed: the DuckDB oracle brute-forces exact 3-shingle Jaccard
-    over ALL pairs ≥ threshold, which equals the LSH output because the
-    fixture corpus's pair-similarity distribution is bimodal (every true
-    pair has J ≥ 0.9, where 32-band × 2-row recall is 1 − (1−0.81)³² ≈ 1;
-    nothing sits in the LSH-risky mid range — verified in-gate: a missed
-    candidate would surface as a row/hash mismatch, not silently pass)."""
+    over ALL pairs ≥ threshold, while this query only verifies 32-band ×
+    2-row LSH candidates, whose recall at Jaccard j is 1 − (1−j²)³². The two
+    agree at sf0.001 and sf0.01, where every true pair has J ≥ 0.9 (recall
+    ≈ 1). They do NOT agree at sf0.1: two pairs at J = 0.1053 (recall
+    ≈ 0.30 each) are missed, so the oracle states the brute-force answer,
+    not this operator's contract. Reconciling the two is the open MinHash
+    item (ROADMAP direction 3)."""
     from autoscan_spark.operators.dedup import minhash_dedup
 
     docs = _docs(spark, sf_dir)

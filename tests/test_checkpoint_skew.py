@@ -243,9 +243,12 @@ def test_resolve_fold_strategy_auto(spark):
 def test_pipeline_auto_fold_output_invariant(spark):
     """two_phase_fold='auto' must not change results — only the physical
     fold strategy."""
+    from autoscan_spark.operators.fold import resolve_fold_strategy
     from autoscan_spark.plans.pipeline import extract_pipeline
 
     tr = synthesize_transcripts(spark, 10, seed=3, skew_conv_turns=3000)
+    # the corpus must really send 'auto' down the two-phase path
+    assert resolve_fold_strategy(tr, "auto", chunk_size=256) is True
     _, auto_docs = extract_pipeline(tr, two_phase_fold="auto", fold_chunk_size=256)
     _, flat_docs = extract_pipeline(tr, two_phase_fold=False)
     a = {r["conv_id"]: r["markdown"] for r in auto_docs.collect()}

@@ -1,14 +1,16 @@
 """Byte-exact contract tests for the ordered document fold.
 
 Expected values derived by hand from the reference semantics
-(_join_markdown_pages, autoscan/autoscan.py:353-383).
+(_join_markdown_pages, autoscan/autoscan.py:353-383); the Spark fold is then
+checked against ``join_pages`` on an adversarial corpus.
 """
 
-import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
+import random
+import sys
 
-from autoscan_spark.kernels.pagejoin import clean_page, combine_chunks, fold_chunk, join_pages
+import pytest
+
+from autoscan_spark.kernels.pagejoin import PAGE_BREAK, clean_page, join_pages
 
 
 CASES = [
@@ -44,16 +46,79 @@ def test_clean_page():
     assert clean_page("---PAGE BREAK---") == ""
 
 
-page_strategy = st.text(
-    alphabet=st.sampled_from(list("ab|#- \n\t")), max_size=24
-) | st.just("---PAGE BREAK---") | st.just("| a |\n|---|\n| 1 |")
+_WS = [chr(c) for c in range(sys.maxunicode + 1) if chr(c).isspace()]
 
 
-@settings(max_examples=300, deadline=None)
-@given(st.lists(page_strategy, max_size=30), st.integers(min_value=1, max_value=7))
-def test_two_phase_fold_equivalent(pages, chunk_size):
-    """The distributed two-level fold must equal the flat fold for any input."""
-    chunks = [
-        fold_chunk(pages[i : i + chunk_size]) for i in range(0, len(pages), chunk_size)
+def test_trim_set_is_python_whitespace():
+    """Catalyst's rtrim gets the exact set str.rstrip() removes."""
+    from autoscan_spark.operators.fold import _PY_WHITESPACE
+
+    assert len(_PY_WHITESPACE) == len(_WS) == 29
+    assert set(_PY_WHITESPACE) == set(_WS)
+
+
+# pages are drawn from every str.isspace() code point, marker pieces, table
+# pipes and non-BMP / invisible characters (emoji, BOM, ZWSP)
+_ALPHABET = _WS + list("ab|#-") + ["\U0001F600", "\ufeff", "\u200b", "é"]
+_PIECES = [PAGE_BREAK, "---PAGE", "BREAK---", "| a |\n|---|\n| 1 |", "|", " |", "| "]
+
+
+def _adversarial_turns(n_convs: int, seed: int) -> list:
+    rng = random.Random(seed)
+    rows = []
+    for c in range(n_convs):
+        shape = rng.random()
+        n = 0 if shape < 0.02 else rng.randint(1, 3) if shape < 0.4 else rng.randint(4, 16)
+        for t in rng.sample(range(1, 40), n):  # gappy, unordered turn_idx
+            parts = []
+            for _ in range(rng.randint(0, 5)):
+                if rng.random() < 0.25:
+                    parts.append(rng.choice(_PIECES))
+                else:
+                    parts.append("".join(rng.choices(_ALPHABET, k=rng.randint(0, 6))))
+            if c % 50 == 0:  # all-empty conversations
+                parts = [rng.choice(_WS + [PAGE_BREAK, ""]) for _ in parts]
+            text = "".join(parts)
+            rows.append((f"c{c}", t, text, t, len(text)))
+    rng.shuffle(rows)
+    return rows
+
+
+@pytest.fixture(scope="module")
+def adversarial(spark):
+    rows = _adversarial_turns(2500, seed=5)
+    by_conv = {}
+    for conv, t, text, _, _ in rows:
+        by_conv.setdefault(conv, []).append((t, text))
+    want, table_joins = {}, 0
+    for conv, ts in by_conv.items():
+        pages = [text for _, text in sorted(ts)]
+        sums = (sum(t for t, _ in ts), sum(map(len, pages)))
+        want[conv] = (join_pages(pages), len(ts), *sums)
+        valid = [p for p in map(clean_page, pages) if p]
+        table_joins += sum(
+            a.endswith("|") and b.startswith("|") for a, b in zip(valid, valid[1:])
+        )
+    # the corpus must exercise the empty-document and table-continuation rules
+    assert len(want) > 2000 and table_joins > 100
+    assert sum(w[0] == "" for w in want.values()) > 20
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, extracted_text string, in_chars long, out_chars long"
+    )
+    return df, want
+
+
+@pytest.mark.parametrize(
+    "two_phase,chunk_size", [(False, 1024), (True, 1), (True, 3), (True, 7)]
+)
+def test_spark_fold_matches_join_pages(adversarial, two_phase, chunk_size):
+    """Both Catalyst fold strategies equal the reference fold per conversation."""
+    from autoscan_spark.operators.fold import DOC_SCHEMA, fold_documents
+
+    df, want = adversarial
+    docs = fold_documents(df, two_phase=two_phase, chunk_size=chunk_size)
+    assert [(f.name, f.dataType) for f in docs.schema.fields] == [
+        (f.name, f.dataType) for f in DOC_SCHEMA.fields
     ]
-    assert combine_chunks(chunks) == join_pages(pages)
+    got = {r["conv_id"]: tuple(r)[1:] for r in docs.collect()}
+    assert got == want

@@ -19,6 +19,14 @@ def _optimized_plan(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _assert_one_python_node(plan: str) -> None:
+    """The extraction kernel is the pipeline's only Python boundary: one
+    MapInArrow, and the fold is pure Catalyst (no pandas / row UDF)."""
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+    assert "BatchEvalPython" not in plan, plan
+
+
 def test_turn_range_filter_pushed_to_scan(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("plan")) + "/t"
     synthesize_transcripts(spark, 20, seed=4).write.parquet(path)
@@ -52,6 +60,7 @@ def test_low_pipeline_has_exactly_one_shuffle(spark, tmp_path_factory):
     plan = _executed_plan(docs)
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, f"expected 1 shuffle, got {n_exchanges}:\n{plan}"
+    _assert_one_python_node(plan)
 
 
 def test_high_pipeline_shuffle_budget(spark, tmp_path_factory):
@@ -61,7 +70,8 @@ def test_high_pipeline_shuffle_budget(spark, tmp_path_factory):
     the already conversation-grouped partitions, so it moves ONE row per
     conversation, not raw turns. (The mapInArrow output does not advertise
     the conv_id partitioning, so Catalyst cannot elide it outright.) The
-    kernel is the low-mode Arrow batch kernel, not a second UDF shape."""
+    kernel is the low-mode Arrow batch kernel, not a second UDF shape, and
+    the fold adds no Python node."""
     path = str(tmp_path_factory.mktemp("plan4")) + "/t"
     synthesize_transcripts(spark, 20, seed=4).filter(
         ~F.col("conv_id").endswith("-error")
@@ -71,12 +81,8 @@ def test_high_pipeline_shuffle_budget(spark, tmp_path_factory):
     plan = _executed_plan(docs)
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 2, f"expected 2 shuffles, got {n_exchanges}:\n{plan}"
-    assert "partial_" in plan  # map-side partial aggregation present
-    # the extraction is one MapInArrow; the only pandas UDF is the fold's
-    extract_plan = _executed_plan(extract_turns(tr, mode="high"))
-    assert "MapInArrow" in extract_plan, extract_plan
-    assert "ArrowEvalPython" not in extract_plan, extract_plan
-    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "partial_collect_list" in plan  # map-side partial aggregation
+    _assert_one_python_node(plan)
 
 
 def test_broadcast_join_for_small_dimension(spark, sf_dir):
